@@ -9,8 +9,13 @@ Python surfaces and *no per-row Python anywhere*:
       -> mapInArrow(build partials)                    -- numpy kernel per batch;
          one output row per (task-partition, key):        map-side combine by
          (key..., sketch binary, n_rows, n_items)         construction
-      -> groupBy(key).applyInPandas(merge)             -- np.maximum/elementwise
+      -> repartition(key).sortWithinPartitions(key)    -- shuffles KB sketches
+      -> mapInArrow(merge key runs)                    -- np.maximum/elementwise
       -> finalize pandas_udf (estimate, quantile, ...)
+
+Parquet inputs skip the JVM scan: ``_scan_shards`` reads planned (file, row
+group) shards with pyarrow inside the tasks, for both ``partials_from_parquet``
+and the resumable ``io.CheckpointedBuild``.
 
 Physical property that makes this scale: the shuffle payload is *sketches*
 (KB each), never raw values. At 100 TB input the shuffle is
@@ -22,6 +27,8 @@ associative + commutative, src/hll.c:776-815 semantics).
 from __future__ import annotations
 
 import math
+import os
+import time
 from typing import Callable, Sequence
 
 import numpy as np
@@ -30,9 +37,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.parquet as papq
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .bloom import BloomFilter
 from .cms import CountMinSketch
@@ -51,6 +59,60 @@ _COUNT_FIELDS = [
 ]
 
 VALUE_KINDS = ("tokens", "int64", "int32", "double", "string")
+
+# Spark type of a probe / candidate value for each discrete value kind
+_VALUE_SPARK_TYPE = {
+    "tokens": T.IntegerType(),
+    "int32": T.IntegerType(),
+    "int64": T.LongType(),
+    "string": T.StringType(),
+}
+
+# lineage columns of a per-shard partial, after the count fields
+_LINEAGE_FIELDS = [
+    T.StructField("shard_id", T.StringType(), False),
+    T.StructField("wall_secs", T.DoubleType(), False),
+]
+
+# Row-group planning reads one parquet footer PER FILE on the driver —
+# O(files) round trips, prohibitive at 10^5-10^6 files. Past this many files
+# partials_from_parquet plans by whole file (rg = -1 -> the task iterates
+# that file's row groups itself; it opens the footer anyway to read).
+RG_PLAN_MAX_FILES = 512
+
+
+def shard_id(file: str, rg: int) -> str:
+    return f"{os.path.basename(file)}#rg{rg}"
+
+
+def enumerate_shards(path: str, whole_file_fallback: bool = False) -> list[tuple[str, int]]:
+    """(file, row_group) work units for a parquet table — the lineage grain.
+
+    ``whole_file_fallback`` plans (file, -1) units instead when the table has
+    more than ``RG_PLAN_MAX_FILES`` files."""
+    dset = pads.dataset(path, format="parquet")
+    if whole_file_fallback and len(dset.files) > RG_PLAN_MAX_FILES:
+        return [(f, -1) for f in dset.files]
+    frags = dset.get_fragments()
+    return [(fr.path, rg) for fr in frags for rg in range(fr.metadata.num_row_groups)]
+
+
+def _place_shards(spark, shards: list[tuple[str, int]], parallelism: int) -> DataFrame:
+    """(files, rgs) DataFrame with EXACTLY one shard group per partition.
+
+    Shards go round-robin into min(#shards, 4 x parallelism) groups: a
+    straggler then costs 1/4 of a wave. parallelize(numSlices=#groups) puts
+    group i in partition i; repartition(n) starts its round-robin at a RANDOM
+    partition, so groups collided (measured at 32 cores: a 0 s / 7 s tail)."""
+    n_tasks = min(len(shards), parallelism * 4)
+    rows = [
+        Row(files=[f for f, _ in g], rgs=[rg for _, rg in g])
+        for g in (shards[i::n_tasks] for i in range(n_tasks))
+    ]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, n_tasks),
+        "files array<string>, rgs array<int>",
+    )
 
 
 _NAN_KEY = object()  # sentinel: one group for all float-NaN key values
@@ -302,7 +364,6 @@ class SketchAggregator:
         path: str,
         parallelism: int | None = None,
         batch_rows: int | None = None,
-        rg_plan_max_files: int = 512,
         per_shard: bool = False,
     ) -> DataFrame:
         """Partial build with task-local vectorized parquet IO.
@@ -325,52 +386,28 @@ class SketchAggregator:
         Costs one partial row per (row group, key) — the same grain the
         checkpoint table uses.
         """
-        cols = self.key_cols + [self.value_col]
-        if batch_rows is None:
-            batch_rows = self._default_batch_rows()
-        dset = pads.dataset(path, format="parquet")
-        files = list(dset.files)
-        if not files:
-            raise ValueError(f"no parquet files under {path}")
-        # Shard granularity: row groups give the best load balance, but
-        # discovering them means one footer read PER FILE on the driver —
-        # O(files) round trips, prohibitive at 10^5-10^6 files. Past the
-        # threshold, plan by whole file (rg = -1 -> the task iterates that
-        # file's row groups itself; it opens the footer anyway to read).
-        if len(files) <= rg_plan_max_files:
-            shards = []
-            for frag in dset.get_fragments():
-                n_rg = frag.metadata.num_row_groups
-                shards.extend((frag.path, rg) for rg in range(n_rg))
-        else:
-            shards = [(f, -1) for f in files]
+        shards = enumerate_shards(path, whole_file_fallback=True)
         if not shards:
             raise ValueError(f"no parquet row groups under {path}")
-        parallelism = parallelism or spark.sparkContext.defaultParallelism
-        # group shards round-robin into n_tasks rows; 4x the core count so the
-        # scheduler load-balances dynamically (a straggler task costs 1/4 of a
-        # wave, not a whole wave). The shard list rides as a pandas/Arrow
-        # DataFrame: no Python-RDD pickle stage, nothing sizable shuffled.
-        n_tasks = min(len(shards), parallelism * 4)
-        groups: list[list] = [[] for _ in range(n_tasks)]
-        for i, s in enumerate(shards):
-            groups[i % n_tasks].append(s)
-        # EXACTLY one shard group per task partition. repartition(n_tasks)
-        # round-robins each input partition from a RANDOM start, so groups
-        # collide: measured at 32 cores, some tasks got zero groups and one
-        # got 4x (min 0.0s / max 7.0s task times) — a straggler tail that
-        # was the single largest N->4N scaling loss. parallelize with
-        # numSlices=len(groups) places each group in its own partition
-        # deterministically; the list is tiny (one row per task).
-        from pyspark.sql import Row
+        parts = self._scan_shards(spark, path, shards, parallelism, batch_rows, per_shard)
+        return parts.drop("shard_id", "wall_secs") if per_shard else parts
 
-        rows = [
-            Row(files=[s[0] for s in g], rgs=[s[1] for s in g]) for g in groups
-        ]
-        sdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, len(rows)),
-            "files array<string>, rgs array<int>",
-        )
+    def _scan_shards(
+        self,
+        spark,
+        path: str,
+        shards: list[tuple[str, int]],
+        parallelism: int | None = None,
+        batch_rows: int | None = None,
+        per_shard: bool = False,
+    ) -> DataFrame:
+        """Partials of ``shards`` of the parquet table at ``path``: one per
+        (task, key), or with ``per_shard`` one per (row group, key) followed
+        by the ``shard_id`` / ``wall_secs`` lineage columns."""
+        cols = self.key_cols + [self.value_col]
+        batch_rows = batch_rows or self._default_batch_rows()
+        parallelism = parallelism or spark.sparkContext.defaultParallelism
+        placed = _place_shards(spark, shards, parallelism)
         build = self._make_build_fn()
 
         def shard_units(batches):
@@ -383,34 +420,39 @@ class SketchAggregator:
                         row_groups = (
                             list(range(pf.metadata.num_row_groups)) if rg < 0 else [rg]
                         )
-                        yield pf, row_groups
+                        yield f, pf, row_groups
+
+        def read(pf, row_groups):
+            return pf.iter_batches(batch_size=batch_rows, row_groups=row_groups, columns=cols)
 
         if per_shard:
 
             def scan_and_build(batches):
-                for pf, row_groups in shard_units(batches):
-                    for one_rg in row_groups:
-                        yield from build(
-                            pf.iter_batches(
-                                batch_size=batch_rows, row_groups=[one_rg], columns=cols
+                for f, pf, row_groups in shard_units(batches):
+                    for rg in row_groups:
+                        t0 = time.perf_counter()
+                        for out in build(read(pf, [rg])):
+                            n = out.num_rows
+                            sid = pa.array([shard_id(f, rg)] * n, type=pa.string())
+                            wall = pa.array([time.perf_counter() - t0] * n, type=pa.float64())
+                            yield pa.RecordBatch.from_arrays(
+                                list(out.columns) + [sid, wall],
+                                names=out.schema.names + ["shard_id", "wall_secs"],
                             )
-                        )
 
         else:
 
             def scan_and_build(batches):
-                def rb_iter():
-                    for pf, row_groups in shard_units(batches):
-                        yield from pf.iter_batches(
-                            batch_size=batch_rows, row_groups=row_groups, columns=cols
-                        )
-
-                yield from build(rb_iter())
+                yield from build(
+                    b for _, pf, row_groups in shard_units(batches) for b in read(pf, row_groups)
+                )
 
         # partial schema: map the parquet arrow schema to Spark types via a
         # zero-row read on the driver (footer only)
-        probe = spark.read.parquet(path).select(*cols)
-        return sdf.mapInArrow(scan_and_build, self._partial_schema(probe))
+        schema = self._partial_schema(spark.read.parquet(path).select(*cols))
+        if per_shard:
+            schema = T.StructType(schema.fields + _LINEAGE_FIELDS)
+        return placed.mapInArrow(scan_and_build, schema)
 
     # -- tree merge -------------------------------------------------------------
 
@@ -790,7 +832,49 @@ class SketchAggregator:
         return merged.mapInPandas(expand, schema)
 
 
-class HllAggregator(SketchAggregator):
+class _DistinctEstimates:
+    """``estimates()`` for the distinct-count aggregators (each defines
+    ``estimate_udf``)."""
+
+    def estimates(
+        self,
+        source: DataFrame | str,
+        salt: int | None = None,
+        *,
+        is_partials: bool = False,
+        spark=None,
+    ) -> DataFrame:
+        """key cols + ``est_distinct`` (+ n_rows/n_items rollups)."""
+        merged = self.merged(source, salt=salt, is_partials=is_partials, spark=spark)
+        return merged.select(
+            *self.key_cols,
+            self.estimate_udf()(F.col("sketch")).alias("est_distinct"),
+            "n_rows",
+            "n_items",
+        )
+
+
+class _Quantiles:
+    """``quantiles()`` for the quantile-sketch aggregators (each sets its
+    sketch class as ``_sketch``)."""
+
+    def quantiles(
+        self, source, qs, *, salt: int | None = None, spark=None
+    ) -> DataFrame:
+        qs = [float(q) for q in qs]
+        from_bytes = self._sketch.from_bytes
+
+        def row_fn(blob: bytes) -> pd.DataFrame:
+            return pd.DataFrame({"q": qs, "value": from_bytes(blob).quantiles(qs)})
+
+        fields = [
+            T.StructField("q", T.DoubleType(), False),
+            T.StructField("value", T.DoubleType(), False),
+        ]
+        return self.finalize_rows(self.merged(source, salt=salt, spark=spark), row_fn, fields)
+
+
+class HllAggregator(_DistinctEstimates, SketchAggregator):
     """Distributed HyperLogLog distinct-count over any key grouping."""
 
     def __init__(
@@ -931,23 +1015,6 @@ class HllAggregator(SketchAggregator):
 
         return est
 
-    def estimates(
-        self,
-        source: DataFrame | str,
-        salt: int | None = None,
-        *,
-        is_partials: bool = False,
-        spark=None,
-    ) -> DataFrame:
-        """key cols + ``est_distinct`` (+ n_rows/n_items rollups)."""
-        merged = self.merged(source, salt=salt, is_partials=is_partials, spark=spark)
-        return merged.select(
-            *self.key_cols,
-            self.estimate_udf()(F.col("sketch")).alias("est_distinct"),
-            "n_rows",
-            "n_items",
-        )
-
 
 class CmsAggregator(SketchAggregator):
     """Distributed count-min: frequency point queries / heavy hitters.
@@ -1037,18 +1104,8 @@ class CmsAggregator(SketchAggregator):
             df = source
         key_cols, value_col, kind = self.key_cols, self.value_col, self.value_kind
 
-        arrow_type = {
-            "tokens": pa.int32(),
-            "int32": pa.int32(),
-            "int64": pa.int64(),
-            "string": pa.string(),
-        }[kind]
-        value_field = {
-            "tokens": T.IntegerType(),
-            "int32": T.IntegerType(),
-            "int64": T.LongType(),
-            "string": T.StringType(),
-        }[kind]
+        value_field = _VALUE_SPARK_TYPE[kind]
+        arrow_type = to_arrow_type(value_field)
         by_name = {f.name: f for f in df.schema.fields}
         cand_schema = T.StructType(
             [by_name[k] for k in key_cols] + [T.StructField("value", value_field, False)]
@@ -1145,7 +1202,7 @@ class CmsAggregator(SketchAggregator):
         )
 
         # one unified fully-distributed path: join candidate lists onto
-        # merged sketches and score in an applyInPandas task per key —
+        # merged sketches and score them in mapInPandas (one row per key) —
         # nothing funnels through the driver. The keyless case runs the same
         # shape under a constant __g key (one candidate list, one sketch).
         group_cols = key_cols if key_cols else ["__g"]
@@ -1209,12 +1266,7 @@ class CmsAggregator(SketchAggregator):
         probes_arr = (
             list(probes) if kind == "string" else np.asarray(probes)
         )
-        probe_field = {
-            "tokens": T.IntegerType(),
-            "int32": T.IntegerType(),
-            "int64": T.LongType(),
-            "string": T.StringType(),
-        }[kind]
+        probe_field = _VALUE_SPARK_TYPE[kind]
 
         def row_fn(blob: bytes) -> pd.DataFrame:
             s = CountMinSketch.from_bytes(blob)
@@ -1259,12 +1311,7 @@ class BloomAggregator(SketchAggregator):
         """key cols + (value, present) for each probe value."""
         kind = self.value_kind
         probes_arr = list(probes) if kind == "string" else np.asarray(probes)
-        probe_field = {
-            "tokens": T.IntegerType(),
-            "int32": T.IntegerType(),
-            "int64": T.LongType(),
-            "string": T.StringType(),
-        }[kind]
+        probe_field = _VALUE_SPARK_TYPE[kind]
 
         def row_fn(blob: bytes) -> pd.DataFrame:
             s = BloomFilter.from_bytes(blob)
@@ -1299,8 +1346,10 @@ class BloomAggregator(SketchAggregator):
         return make
 
 
-class KllAggregator(SketchAggregator):
+class KllAggregator(_Quantiles, SketchAggregator):
     """Distributed KLL: rank/quantile queries over numeric columns."""
+
+    _sketch = KllSketch
 
     def __init__(
         self,
@@ -1323,23 +1372,8 @@ class KllAggregator(SketchAggregator):
     def _merge_blobs(self, blobs) -> KllSketch:
         return KllSketch.merge_blobs(blobs, self.k, self.seed)
 
-    def quantiles(
-        self, source, qs, *, salt: int | None = None, spark=None
-    ) -> DataFrame:
-        qs = [float(q) for q in qs]
 
-        def row_fn(blob: bytes) -> pd.DataFrame:
-            s = KllSketch.from_bytes(blob)
-            return pd.DataFrame({"q": qs, "value": s.quantiles(qs)})
-
-        fields = [
-            T.StructField("q", T.DoubleType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-        return self.finalize_rows(self.merged(source, salt=salt, spark=spark), row_fn, fields)
-
-
-class KmvAggregator(SketchAggregator):
+class KmvAggregator(_DistinctEstimates, SketchAggregator):
     """Distributed KMV/theta sketch: distinct counts with native set
     intersection/Jaccard (no inclusion–exclusion), order-exact merge."""
 
@@ -1372,22 +1406,6 @@ class KmvAggregator(SketchAggregator):
             ).astype("int64")
 
         return est
-
-    def estimates(
-        self,
-        source: DataFrame | str,
-        salt: int | None = None,
-        *,
-        is_partials: bool = False,
-        spark=None,
-    ) -> DataFrame:
-        merged = self.merged(source, salt=salt, is_partials=is_partials, spark=spark)
-        return merged.select(
-            *self.key_cols,
-            self.estimate_udf()(F.col("sketch")).alias("est_distinct"),
-            "n_rows",
-            "n_items",
-        )
 
 
 class ProfileAggregator(SketchAggregator):
@@ -1492,8 +1510,10 @@ class ProfileAggregator(SketchAggregator):
         return out
 
 
-class TDigestAggregator(SketchAggregator):
+class TDigestAggregator(_Quantiles, SketchAggregator):
     """Distributed t-digest: quantile/CDF queries, tight at the tails."""
+
+    _sketch = TDigest
 
     def __init__(
         self,
@@ -1514,21 +1534,6 @@ class TDigestAggregator(SketchAggregator):
 
     def _merge_blobs(self, blobs) -> TDigest:
         return TDigest.merge_blobs(blobs, self.delta)
-
-    def quantiles(
-        self, source, qs, *, salt: int | None = None, spark=None
-    ) -> DataFrame:
-        qs = [float(q) for q in qs]
-
-        def row_fn(blob: bytes) -> pd.DataFrame:
-            s = TDigest.from_bytes(blob)
-            return pd.DataFrame({"q": qs, "value": s.quantiles(qs)})
-
-        fields = [
-            T.StructField("q", T.DoubleType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-        return self.finalize_rows(self.merged(source, salt=salt, spark=spark), row_fn, fields)
 
 
 class FiAggregator(SketchAggregator):

@@ -3,8 +3,8 @@
 The distributed analogue of the reference's pickle persistence
 (src/hll.c:847-985) plus its `_get_meta()` debug metadata (src/hll.c:569-591),
 made durable: every parquet row-group shard that has been sketched is recorded
-as a partial-sketch row with lineage (shard id, row/item counts, wall time,
-task partition). Resuming a run:
+as a partial-sketch row with lineage (shard id, row/item counts, wall time).
+Resuming a run:
 
     pending = all input shards  ANTI-JOIN  checkpointed shard ids
     build only pending -> append to the checkpoint table
@@ -19,22 +19,13 @@ Iceberg-ready (append-only partials keyed by shard) — swap the writer for
 from __future__ import annotations
 
 import os
-import time
 import uuid
 
-import pyarrow as pa
-import pyarrow.dataset as pads
-import pyarrow.parquet as papq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .agg import SketchAggregator
-
-_LINEAGE_FIELDS = [
-    T.StructField("shard_id", T.StringType(), False),
-    T.StructField("wall_secs", T.DoubleType(), False),
-]
+from .agg import SketchAggregator, enumerate_shards, shard_id
 
 
 def scratch_dir(prefix: str) -> str:
@@ -129,25 +120,12 @@ def read_partials(spark: SparkSession, target: str) -> DataFrame:
     return spark.read.parquet(target)
 
 
-def enumerate_shards(path: str) -> list[tuple[str, int]]:
-    """(file, row_group) work units for a parquet table — the lineage grain."""
-    dset = pads.dataset(path, format="parquet")
-    shards = []
-    for frag in dset.get_fragments():
-        for rg in range(frag.metadata.num_row_groups):
-            shards.append((frag.path, rg))
-    return shards
-
-
-def shard_id(file: str, rg: int) -> str:
-    return f"{os.path.basename(file)}#rg{rg}"
-
-
 class CheckpointedBuild:
     """Resumable partial-sketch build over a parquet table.
 
     Each call to :meth:`run` sketches only shards not yet checkpointed and
-    appends them (one partial row per (shard, key), with lineage). ``merged``
+    appends them (one partial row per (shard, key), with lineage) — the
+    same task-local scan as ``partials_from_parquet(per_shard=True)``. ``merged``
     then answers from the checkpoint alone. ``max_shards`` bounds one
     invocation's work — the unit tests use it to simulate interruption.
     """
@@ -175,23 +153,30 @@ class CheckpointedBuild:
     # -- state ------------------------------------------------------------------
 
     def completed_shards(self, spark: SparkSession) -> set[str]:
-        try:
-            rows = read_partials(spark, self.ckpt_dir).select("shard_id").distinct().collect()
-        except Exception:
+        """Shard ids already checkpointed. Only a checkpoint that does not
+        exist yet reads as empty: any other read error (a corrupt part file,
+        a permissions problem) raises, because "nothing done" would re-sketch
+        finished shards and append duplicate partials."""
+        if "/" not in self.ckpt_dir and not spark.catalog.tableExists(self.ckpt_dir):
             return set()
-        return {r["shard_id"] for r in rows}
+        try:
+            parts = read_partials(spark, self.ckpt_dir)
+        except FileNotFoundError:
+            return set()
+        except AnalysisException as e:
+            # PATH_NOT_FOUND: a scheme-qualified target that does not exist;
+            # UNABLE_TO_INFER_SCHEMA: a directory holding no part files yet
+            # (a first append that failed)
+            if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise
+            return set()
+        return {r["shard_id"] for r in parts.select("shard_id").distinct().collect()}
 
     def pending_shards(self, spark: SparkSession, input_path: str) -> list[tuple[str, int]]:
         done = self.completed_shards(spark)
         return [s for s in enumerate_shards(input_path) if shard_id(*s) not in done]
 
     # -- build ------------------------------------------------------------------
-
-    def _partial_schema(self, spark: SparkSession, input_path: str) -> T.StructType:
-        cols = self.agg.key_cols + [self.agg.value_col]
-        probe = spark.read.parquet(input_path).select(*cols)
-        base = self.agg._partial_schema(probe)
-        return T.StructType(list(base.fields) + _LINEAGE_FIELDS)
 
     def run(
         self,
@@ -202,53 +187,14 @@ class CheckpointedBuild:
         batch_rows: int | None = None,
     ) -> int:
         """Sketch pending shards into the checkpoint; returns #shards done now."""
-        if batch_rows is None:
-            batch_rows = self.agg._default_batch_rows()
         pending = self.pending_shards(spark, input_path)
         if max_shards is not None:
             pending = pending[:max_shards]
         if not pending:
             return 0
-        agg = self.agg
-        cols = agg.key_cols + [agg.value_col]
-        build = agg._make_build_fn()
-        out_schema = self._partial_schema(spark, input_path)
-
-        parallelism = parallelism or spark.sparkContext.defaultParallelism
-        n_tasks = min(len(pending), parallelism * 4)
-        groups: list[list] = [[] for _ in range(n_tasks)]
-        for i, s in enumerate(pending):
-            groups[i % n_tasks].append(s)
-        import pandas as pd
-
-        shard_pdf = pd.DataFrame(
-            {
-                "files": [[s[0] for s in g] for g in groups],
-                "rgs": [[s[1] for s in g] for g in groups],
-            }
+        partials = self.agg._scan_shards(
+            spark, input_path, pending, parallelism, batch_rows, per_shard=True
         )
-        sdf = spark.createDataFrame(shard_pdf).repartition(n_tasks)
-
-        def scan_build_tagged(batches):
-            for b in batches:
-                for files, rgs in zip(b.column("files").to_pylist(), b.column("rgs").to_pylist()):
-                    for f, rg in zip(files, rgs):
-                        t0 = time.perf_counter()
-                        pf = papq.ParquetFile(f)
-                        rb_iter = pf.iter_batches(
-                            batch_size=batch_rows, row_groups=[rg], columns=cols
-                        )
-                        for out in build(rb_iter):
-                            wall = time.perf_counter() - t0
-                            n = out.num_rows
-                            sid = pa.array([shard_id(f, rg)] * n, type=pa.string())
-                            ws = pa.array([wall] * n, type=pa.float64())
-                            yield pa.RecordBatch.from_arrays(
-                                list(out.columns) + [sid, ws],
-                                names=out.schema.names + ["shard_id", "wall_secs"],
-                            )
-
-        partials = sdf.mapInArrow(scan_build_tagged, out_schema)
         append_partials(partials, self.ckpt_dir, spark)
         return len(pending)
 

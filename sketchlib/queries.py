@@ -61,12 +61,6 @@ def hll_tokens_per_source(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) 
     return agg.estimates(sequences_path(spark, sf_dir), spark=spark).orderBy("source")
 
 
-def hll_tokens_global(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
-    """Approximate distinct tokens over the whole table (keyless rollup)."""
-    agg = HllAggregator(p=p, key_cols=[], value_col="tokens", value_kind="tokens")
-    return agg.estimates(sequences_path(spark, sf_dir), salt=8, spark=spark)
-
-
 def exact_distinct_tokens_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact oracle companion of hll_tokens_per_source (small scales only —
 

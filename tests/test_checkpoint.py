@@ -120,3 +120,51 @@ def test_checkpoint_is_aggregator_generic_kmv_and_profile(spark, seq_path, tmp_p
         s = ProfileSketch.from_bytes(bytes(r["sketch"]))
         assert s.distinct_values() > 0
         assert s.kll.n == r["n_rows"]  # every row's length landed in the KLL
+
+
+def test_corrupt_checkpoint_raises_instead_of_resketching(spark, seq_path, tmp_path):
+    """A checkpoint that exists but cannot be read must fail the resume: a
+    read error taken as "nothing done" would re-sketch the finished shard
+    and append duplicate partials (a double-counting resume)."""
+    import os
+
+    ckpt = CheckpointedBuild(HllAggregator(p=10, key_cols=["source"]), str(tmp_path), run_id="c1")
+    assert ckpt.run(spark, seq_path, max_shards=1) == 1
+    with open(os.path.join(ckpt.ckpt_dir, "part-99999-garbage.parquet"), "wb") as f:
+        f.write(b"not a parquet file" * 64)
+    before = sorted(os.listdir(ckpt.ckpt_dir))
+    with pytest.raises(Exception, match="part-99999-garbage"):
+        ckpt.run(spark, seq_path)
+    assert sorted(os.listdir(ckpt.ckpt_dir)) == before
+
+
+def test_missing_or_empty_checkpoint_reads_as_nothing_done(spark, seq_path, tmp_path):
+    """The cases that DO mean "nothing checkpointed yet": a local path or a
+    scheme-qualified path that does not exist, and a directory holding no
+    part files (a first append that failed)."""
+    agg = HllAggregator(p=10, key_cols=["source"])
+    missing = CheckpointedBuild(agg, str(tmp_path), run_id="m1")
+    assert missing.completed_shards(spark) == set()
+    qualified = CheckpointedBuild(agg, "file://" + str(tmp_path), run_id="m2")
+    assert qualified.completed_shards(spark) == set()
+    empty = CheckpointedBuild(agg, str(tmp_path), run_id="m3")
+    (tmp_path / "m3" / "partials").mkdir(parents=True)
+    assert empty.run(spark, seq_path, max_shards=1) == 1
+    assert len(empty.completed_shards(spark)) == 1
+
+
+def test_shard_placement_one_group_per_partition(spark):
+    """Both parquet build entry points place shard groups through
+    _place_shards: exactly one non-empty group per partition, group i in
+    partition i, shards dealt round-robin in planning order."""
+    from sketchlib.agg import _place_shards
+
+    shards = [(f"f{i // 3}.parquet", i % 3) for i in range(10)]
+    for par in (1, 2, 3, 8):
+        n_tasks = min(len(shards), par * 4)
+        parts = _place_shards(spark, shards, par).rdd.glom().collect()
+        assert len(parts) == n_tasks
+        for i, rows in enumerate(parts):
+            assert len(rows) == 1
+            group = list(zip(rows[0]["files"], rows[0]["rgs"]))
+            assert group == shards[i::n_tasks] and group

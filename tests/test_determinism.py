@@ -174,3 +174,10 @@ def test_per_shard_build_byte_identical_across_parallelism(spark, tmp_path, Agg)
         )
     assert set(results[0]) == {"a", "b", "c"}
     assert results[0] == results[1]
+
+    # a checkpointed build shares the per-shard scan: same bytes
+    from sketchlib.io import CheckpointedBuild
+
+    ckpt = CheckpointedBuild(agg, str(tmp_path / "ckpt"), run_id=Agg)
+    ckpt.run_to_completion(spark, path, parallelism=3)
+    assert {r["k"]: bytes(r["sketch"]) for r in ckpt.merged(spark).collect()} == results[0]
