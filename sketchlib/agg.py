@@ -15,7 +15,8 @@ Python surfaces and *no per-row Python anywhere*:
 
 Parquet inputs skip the JVM scan: ``_scan_shards`` reads planned (file, row
 group) shards with pyarrow inside the tasks, for both ``partials_from_parquet``
-and the resumable ``io.CheckpointedBuild``.
+and the resumable ``io.CheckpointedBuild``. ``_place_shards`` packs the shards
+by footer bytes into one group per core (LPT), so the build is one wave.
 
 Physical property that makes this scale: the shuffle payload is *sketches*
 (KB each), never raw values. At 100 TB input the shuffle is
@@ -26,6 +27,7 @@ associative + commutative, src/hll.c:776-815 semantics).
 
 from __future__ import annotations
 
+import heapq
 import math
 import os
 import time
@@ -36,8 +38,9 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
+import pyarrow.fs as pafs
 import pyarrow.parquet as papq
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
@@ -85,34 +88,47 @@ def shard_id(file: str, rg: int) -> str:
     return f"{os.path.basename(file)}#rg{rg}"
 
 
-def enumerate_shards(path: str, whole_file_fallback: bool = False) -> list[tuple[str, int]]:
-    """(file, row_group) work units for a parquet table — the lineage grain.
+def enumerate_shards(path: str, whole_file_fallback: bool = False) -> list[tuple[str, int, int]]:
+    """(file, row_group, weight) work units for a parquet table — the lineage
+    grain. The weight is the row group's footer ``total_byte_size``.
 
-    ``whole_file_fallback`` plans (file, -1) units instead when the table has
-    more than ``RG_PLAN_MAX_FILES`` files."""
+    ``whole_file_fallback`` plans (file, -1, file size) units instead when the
+    table has more than ``RG_PLAN_MAX_FILES`` files; the sizes come from ONE
+    recursive listing, not a stat or footer read per file."""
     dset = pads.dataset(path, format="parquet")
     if whole_file_fallback and len(dset.files) > RG_PLAN_MAX_FILES:
-        return [(f, -1) for f in dset.files]
-    frags = dset.get_fragments()
-    return [(fr.path, rg) for fr in frags for rg in range(fr.metadata.num_row_groups)]
-
-
-def _place_shards(spark, shards: list[tuple[str, int]], parallelism: int) -> DataFrame:
-    """(files, rgs) DataFrame with EXACTLY one shard group per partition.
-
-    Shards go round-robin into min(#shards, 4 x parallelism) groups: a
-    straggler then costs 1/4 of a wave. parallelize(numSlices=#groups) puts
-    group i in partition i; repartition(n) starts its round-robin at a RANDOM
-    partition, so groups collided (measured at 32 cores: a 0 s / 7 s tail)."""
-    n_tasks = min(len(shards), parallelism * 4)
-    rows = [
-        Row(files=[f for f, _ in g], rgs=[rg for _, rg in g])
-        for g in (shards[i::n_tasks] for i in range(n_tasks))
+        root = pafs.FileSystem.from_uri(path)[1] if "://" in path else path
+        listing = dset.filesystem.get_file_info(pafs.FileSelector(root, recursive=True))
+        sizes = {i.path: i.size for i in listing}
+        return [(f, -1, sizes[f]) for f in dset.files]
+    return [
+        (fr.path, rg, fr.metadata.row_group(rg).total_byte_size)
+        for fr in dset.get_fragments()
+        for rg in range(fr.metadata.num_row_groups)
     ]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, n_tasks),
-        "files array<string>, rgs array<int>",
-    )
+
+
+def _place_shards(
+    shards: list[tuple[str, int, int]], parallelism: int
+) -> list[list[tuple[str, int]]]:
+    """LPT (longest-processing-time-first) plan of weighted shards into
+    min(#shards, parallelism) groups of (file, row_group), one task each.
+
+    Shards go heaviest first into the least-loaded group (equal weights keep
+    planning order, equal loads take the lowest group); the groups come back
+    heaviest first. The largest group's load is at most 4/3 of the best
+    possible (Graham's LPT bound). One group per core makes the build one
+    wave: every Python task pays a fixed start-up cost (PySpark's worker
+    re-reads each zip and jar on its path per task), so splitting into more,
+    smaller tasks costs more than the straggler tail it trims."""
+    n = min(len(shards), parallelism)
+    groups: list[list[tuple[str, int]]] = [[] for _ in range(n)]
+    heap = [(0, g) for g in range(n)]  # (load, group)
+    for f, rg, w in sorted(shards, key=lambda s: -s[2]):
+        load, g = heapq.heappop(heap)
+        groups[g].append((f, rg))
+        heapq.heappush(heap, (load + w, g))
+    return [groups[g] for _, g in sorted(heap, key=lambda lg: (-lg[0], lg[1]))]
 
 
 _NAN_KEY = object()  # sentinel: one group for all float-NaN key values
@@ -373,9 +389,9 @@ class SketchAggregator:
         through the JVM scan. Rationale (measured): Spark's InternalRow ->
         Arrow re-encode of array<int32> columns costs ~10x the sketch kernel;
         reading the columnar file straight into Arrow recovers that. Columns
-        are pruned at the reader (only key+value are decoded). Row-group
-        granularity matches what Spark's own split planning uses, so skew
-        and parallelism behave the same at cluster scale.
+        are pruned at the reader (only key+value are decoded). The row
+        groups are packed by footer bytes into one task per core
+        (``_place_shards``), so the build runs as one wave.
 
         ``per_shard=True`` emits one partial per ROW GROUP instead of one per
         task. The partial multiset then depends only on the input file layout
@@ -407,15 +423,13 @@ class SketchAggregator:
         cols = self.key_cols + [self.value_col]
         batch_rows = batch_rows or self._default_batch_rows()
         parallelism = parallelism or spark.sparkContext.defaultParallelism
-        placed = _place_shards(spark, shards, parallelism)
+        groups = _place_shards(shards, parallelism)
         build = self._make_build_fn()
 
         def shard_units(batches):
             for b in batches:
-                for files, rgs in zip(
-                    b.column("files").to_pylist(), b.column("rgs").to_pylist()
-                ):
-                    for f, rg in zip(files, rgs):
+                for g in b.column(0).to_pylist():
+                    for f, rg in groups[g]:
                         pf = papq.ParquetFile(f)
                         row_groups = (
                             list(range(pf.metadata.num_row_groups)) if rg < 0 else [rg]
@@ -452,6 +466,9 @@ class SketchAggregator:
         schema = self._partial_schema(spark.read.parquet(path).select(*cols))
         if per_shard:
             schema = T.StructType(schema.fields + _LINEAGE_FIELDS)
+        # partition i of range(n, numPartitions=n) holds just the id i, and its
+        # task reads group i from the closure (PySpark broadcasts a large one)
+        placed = spark.range(len(groups), numPartitions=len(groups))
         return placed.mapInArrow(scan_and_build, schema)
 
     # -- tree merge -------------------------------------------------------------

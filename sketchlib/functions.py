@@ -14,10 +14,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
+from .agg import _VALUE_SPARK_TYPE
 from .bloom import BloomFilter
 from .cms import CountMinSketch
 from .hll import HllSketch
@@ -33,6 +36,10 @@ import weakref
 _REGISTERED_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
     weakref.WeakKeyDictionary()
 )
+
+
+# probe arrow type -> the value kind a sketch hashed (int32 hashes as tokens)
+_PROBE_KIND = {to_arrow_type(t): kind for kind, t in _VALUE_SPARK_TYPE.items()}
 
 
 def _hll_estimates_np(blobs: list) -> np.ndarray:
@@ -314,16 +321,23 @@ def register(spark: SparkSession, prefix: str = "", force: bool = False) -> None
             dtype="float64",
         )
 
-    @F.pandas_udf(T.LongType())
-    def cms_point(blobs: pd.Series, values: pd.Series) -> pd.Series:
-        return pd.Series(
+    @F.arrow_udf(T.LongType())
+    def cms_point(blobs: pa.Array, values: pa.Array) -> pa.Array:
+        """Count-min estimate of each probe. The probe hashes by its SQL type,
+        as the aggregator hashed its values: INT for ``tokens`` / int32
+        sketches, BIGINT for int64 sketches, STRING for string sketches, so
+        probes of an int64 sketch must be BIGINT."""
+        kind = _PROBE_KIND.get(values.type)
+        if kind is None:
+            raise TypeError(f"cms_point probes must be INT, BIGINT or STRING, not {values.type}")
+        return pa.array(
             [
                 None
-                if b is None or pd.isna(v)
-                else int(CountMinSketch.from_bytes(bytes(b)).query_batch([int(v)], kind="int64")[0])
-                for b, v in zip(blobs, values)
+                if b is None or v is None
+                else int(CountMinSketch.from_bytes(b).query_batch([v], kind=kind)[0])
+                for b, v in zip(blobs.to_pylist(), values.to_pylist())
             ],
-            dtype="Int64",
+            type=pa.int64(),
         )
 
     @F.pandas_udf(T.LongType())

@@ -172,9 +172,9 @@ class CheckpointedBuild:
             return set()
         return {r["shard_id"] for r in parts.select("shard_id").distinct().collect()}
 
-    def pending_shards(self, spark: SparkSession, input_path: str) -> list[tuple[str, int]]:
+    def pending_shards(self, spark: SparkSession, input_path: str) -> list[tuple[str, int, int]]:
         done = self.completed_shards(spark)
-        return [s for s in enumerate_shards(input_path) if shard_id(*s) not in done]
+        return [s for s in enumerate_shards(input_path) if shard_id(s[0], s[1]) not in done]
 
     # -- build ------------------------------------------------------------------
 

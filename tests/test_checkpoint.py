@@ -154,17 +154,44 @@ def test_missing_or_empty_checkpoint_reads_as_nothing_done(spark, seq_path, tmp_
 
 
 def test_shard_placement_one_group_per_partition(spark):
-    """Both parquet build entry points place shard groups through
-    _place_shards: exactly one non-empty group per partition, group i in
-    partition i, shards dealt round-robin in planning order."""
+    """Both parquet build entry points place shards through _place_shards:
+    an LPT plan of min(#shards, parallelism) non-empty groups, each shard
+    exactly once, heaviest group first, deterministic for equal weights, and
+    a largest group within Graham's LPT bound (4/3 - 1/(3m)) x optimum.
+    _scan_shards runs group i as partition i of range(m, numPartitions=m)."""
+    import itertools
+
     from sketchlib.agg import _place_shards
 
-    shards = [(f"f{i // 3}.parquet", i % 3) for i in range(10)]
-    for par in (1, 2, 3, 8):
-        n_tasks = min(len(shards), par * 4)
-        parts = _place_shards(spark, shards, par).rdd.glom().collect()
-        assert len(parts) == n_tasks
-        for i, rows in enumerate(parts):
-            assert len(rows) == 1
-            group = list(zip(rows[0]["files"], rows[0]["rgs"]))
-            assert group == shards[i::n_tasks] and group
+    rng = np.random.default_rng(7)
+    for trial in range(60):
+        n, par = int(rng.integers(1, 8)), int(rng.integers(1, 5))
+        w = rng.integers(1, 100, n) if trial % 3 else rng.pareto(1.0, n) * 1e6 + 1
+        shards = [(f"f{i // 3}.parquet", i % 3, int(w[i])) for i in range(n)]
+        weight = {(f, rg): wt for f, rg, wt in shards}
+        groups = _place_shards(shards, par)
+        m = min(n, par)
+        assert len(groups) == m and all(groups)
+        assert sorted(s for g in groups for s in g) == sorted(weight)
+        load = [sum(weight[s] for s in g) for g in groups]
+        assert load == sorted(load, reverse=True)
+        # the optimum by brute force over every assignment (m^n <= 4^7)
+        opt = min(
+            max(sum(weight[s] for s, a in zip(weight, assign) if a == g) for g in range(m))
+            for assign in itertools.product(range(m), repeat=n)
+        )
+        assert load[0] <= (4 / 3 - 1 / (3 * m)) * opt + 1e-9
+
+    # equal weights: the same plan every time, shards dealt in planning order
+    equal = [(f"f{i}.parquet", 0, 10) for i in range(6)]
+    expected = [
+        [("f0.parquet", 0), ("f4.parquet", 0)],
+        [("f1.parquet", 0), ("f5.parquet", 0)],
+        [("f2.parquet", 0)],
+        [("f3.parquet", 0)],
+    ]
+    assert _place_shards(equal, 4) == _place_shards(list(equal), 4) == expected
+
+    for m in (1, 3, 8):
+        parts = spark.range(m, numPartitions=m).rdd.glom().collect()
+        assert [[r.id for r in rows] for rows in parts] == [[i] for i in range(m)]

@@ -62,6 +62,42 @@ def test_cms_point_function(sql):
     assert r["t"] == 1010
 
 
+def test_cms_point_hashes_probe_by_sql_type(sql):
+    """A sketch built from int32 ``tokens`` probed with an INT column hashes
+    the probe as int32, so it never undercounts; STRING probes hash as
+    strings."""
+    from pyspark.sql import types as T
+
+    from sketchlib.agg import CmsAggregator
+
+    rows = [("a", [5] * 18 + [6] * 3 + list(range(100, 140))), ("b", [5, 7])]
+    df = sql.createDataFrame(
+        rows,
+        T.StructType([
+            T.StructField("source", T.StringType(), False),
+            T.StructField("tokens", T.ArrayType(T.IntegerType(), False), False),
+        ]),
+    )
+    merged = CmsAggregator(width_log2=12, key_cols=["source"]).merged(df)
+    merged.createOrReplaceTempView("cms_tok")
+    sql.createDataFrame(
+        [("a", 5, 18), ("a", 6, 3), ("a", 120, 1), ("b", 7, 1)],
+        "source string, probe int, exact bigint",
+    ).createOrReplaceTempView("cms_probe")
+    got = sql.sql(
+        "SELECT exact, cms_point(sketch, probe) AS est FROM cms_tok JOIN cms_probe USING (source)"
+    ).collect()
+    assert len(got) == 4
+    assert all(r["exact"] <= r["est"] for r in got), got
+
+    s = CountMinSketch.empty(width_log2=12, depth=5)
+    s.update_batch(np.array(["x"] * 9 + ["y"], dtype=object), kind="string")
+    sql.createDataFrame(
+        [(bytearray(s.to_bytes()), "x")], "cms binary, w string"
+    ).createOrReplaceTempView("cms_str")
+    assert sql.sql("SELECT cms_point(cms, w) AS f FROM cms_str").collect()[0]["f"] >= 9
+
+
 def test_minhash_jaccard_function(sql):
     rng = np.random.default_rng(5)
     a_toks = rng.integers(0, 5000, 300).astype(np.int64)
